@@ -4,7 +4,7 @@ A from-scratch, Spark-first rebuild of the capabilities of the reference
 engine (``leszekbednorz/miru``, category ``fulltext_index``): inverted-index
 construction over tables of source-code files (delta-encoded, varint/PFOR
 compressed posting lists built with vectorized Arrow UDFs), salted term-shuffle
-merge with explicit hot-term skew handling, block-max WAND top-k BM25 query
+merge with explicit hot-term skew handling, vectorized top-k BM25 query
 serving (k1=1.2, b=0.75), per-partition checkpoint/resume with lineage, plus
 the relational / text-pipeline operators a large-scale training-data pipeline
 needs (dedup, similarity search, quality scoring).

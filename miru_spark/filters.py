@@ -87,12 +87,16 @@ class Prefix:
         return hash(("Prefix", self.value))
 
     def upper_bound(self) -> str | None:
-        """Smallest string > every string with this prefix, or None when
-        no such bound exists (every char already at the max code point)."""
+        """Smallest encodable string > every string with this prefix, or
+        None when no such bound exists (every char already at the max code
+        point). The surrogates U+D800-U+DFFF are skipped: a lone one cannot
+        be UTF-8-encoded into the pyarrow bound. The bound only prunes;
+        the starts-with check decides the answer."""
         v = self.value
         for i in range(len(v) - 1, -1, -1):
-            if ord(v[i]) < 0x10FFFF:
-                return v[:i] + chr(ord(v[i]) + 1)
+            c = ord(v[i])
+            if c < 0x10FFFF:
+                return v[:i] + chr(0xE000 if 0xD7FF <= c < 0xE000 else c + 1)
         return None
 
 

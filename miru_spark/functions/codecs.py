@@ -74,7 +74,7 @@ def varint_decode(buf: bytes | memoryview | np.ndarray, offset: int = 0, count: 
     raw = raw[offset:]
     if count is not None:
         # bound the scan: a value is at most 10 varint bytes, so per-block
-        # decode stays O(block), not O(remaining blob) (the WAND hot path)
+        # decode stays O(block), not O(remaining blob)
         raw = raw[: count * 10]
     if raw.size == 0:
         return np.empty(0, dtype=np.uint64), 0

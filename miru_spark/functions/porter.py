@@ -263,10 +263,12 @@ def stem_corpus_dict(corpus, content_col: str = "content"):
         )
     )
     other = [c for c in corpus.columns if c != content_col]
+    # left join: a doc with no surviving token (empty or all-stopword) has
+    # no stemmed row and keeps empty content, as on the UDF path
     return (
         corpus.select(*other)
-        .join(stemmed, "doc_id")
-        .withColumn(content_col, F.col("__stemmed"))
+        .join(stemmed, "doc_id", "left")
+        .withColumn(content_col, F.coalesce(F.col("__stemmed"), F.lit("")))
         .drop("__stemmed")
         .select(*corpus.columns)
     )

@@ -43,7 +43,6 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from miru_spark.functions import bm25
 from miru_spark.functions.codecs import (
     CODEC_PFOR,
     CODEC_VARINT,
@@ -184,18 +183,6 @@ def _block_frontiers(
     ]
 
 
-def impact_bound(i_tf, i_dl, idf: float, avgdl: float) -> float:
-    """Exact (or capped-safe) block-max BM25 upper bound from stored impacts
-    under CURRENT corpus stats. Tiny lists — plain Python beats numpy here."""
-    k1, b = bm25.K1, bm25.B
-    best = 0.0
-    for tf, dl in zip(i_tf, i_dl):
-        s = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        if s > best:
-            best = s
-    return idf * best
-
-
 def pack_chunk(
     docids: np.ndarray,
     tfs: np.ndarray,
@@ -309,25 +296,6 @@ def unpack_block(blob, meta: dict, prev_last_docid: int, codec: int):
     dls, _ = _dec(blob, int(meta["off_d"]), n, codec)
     docids = delta_decode(gaps, base=prev_last_docid)
     return docids, tfs, dls
-
-
-def best_block_scores(
-    fr_off: np.ndarray, fr_tf: np.ndarray, fr_dl: np.ndarray, avgdl: float
-) -> np.ndarray:
-    """Per-block max UNSCALED BM25 score (idf excluded — multiply by the
-    query term's idf for the exact block-max bound) from flattened impact
-    frontiers: one vectorized pass over every (tf, dl) pair of every block
-    + a segmented max. Replaces the per-block Python loop the driver paid
-    once per block per query."""
-    nb = fr_off.size - 1
-    if nb <= 0:
-        return np.empty(0, dtype=np.float64)
-    k1, b = bm25.K1, bm25.B
-    tf = fr_tf.astype(np.float64)
-    dl = fr_dl.astype(np.float64)
-    s = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-    # frontiers are non-empty by construction; reduceat needs that
-    return np.maximum.reduceat(s, fr_off[:-1].astype(np.int64))
 
 
 def unpack_block_bm(blob, bm: dict, j: int, prev_last_docid: int, codec: int):

@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from miru_spark.functions import bm25
-from miru_spark.index.format import impact_bound
 from miru_spark.index.writer import term_pref_py
 
 
@@ -99,51 +98,15 @@ def _lev_within(a: str, b: str, k: int, transpositions: bool = False) -> bool:
 @dataclass
 class TermPostings:
     """One term's posting list as an ordered list of chunk rows (driver-side
-    handle; blocks decode lazily inside the WAND loop)."""
+    handle). Each row holds what the decoders read — ``blob``, ``codec``,
+    the per-block metadata ``bm`` (numpy ``n``/``last``/``off_*``) and,
+    on a positional fetch, ``pos_blob``; :meth:`IndexReader.decode_term`
+    turns the rows into whole (doc_id, tf, doc_len) columns."""
 
     term: str
     df: float
     idf: float
     chunks: list = field(default_factory=list)  # rows sorted by bucket
-
-    def max_score(self, avgdl: float) -> float:
-        """Term-max upper bound under CURRENT stats, from the chunks' stored
-        (tf, dl) impact frontiers (stats-free on disk)."""
-        return max(
-            (impact_bound(r["i_tf"], r["i_dl"], self.idf, avgdl) for r in self.chunks),
-            default=0.0,
-        )
-
-    def block_arrays(self, avgdl: float):
-        """Concatenated per-block numpy metadata across this term's chunks
-        (bucket-ordered): (last_docids, idf-scaled max bounds, sources) —
-        the vectorized feed for PostingIterator; no per-block Python."""
-        from miru_spark.index.format import best_block_scores
-
-        lasts, bests, srcs = [], [], []
-        for r in self.chunks:
-            bm = r["bm"]
-            lasts.append(bm["last"])
-            if bm["avgdl"] == avgdl:
-                bests.append(bm["best"])
-            else:
-                # caller scores under DIFFERENT corpus stats (e.g. a
-                # time-traveled snapshot): re-derive exact bounds from the
-                # stats-free frontiers instead of using the baked avgdl
-                bests.append(
-                    best_block_scores(
-                        bm["fr_off"], bm["fr_tf"], bm["fr_dl"], avgdl
-                    )
-                )
-            srcs.append((r["blob"], bm, int(r["codec"])))
-        if not lasts:
-            e = np.empty(0, dtype=np.int64)
-            return e, e.astype(np.float64), []
-        return (
-            np.concatenate(lasts),
-            self.idf * np.concatenate(bests),
-            srcs,
-        )
 
 
 class IndexReader:
@@ -631,86 +594,60 @@ class IndexReader:
                 )
             dset = self._dset
             flt = pc.field("term_pref").isin(prefs) & pc.field("term").isin(terms)
-        cols = [n for n in dset.schema.names if n != "pos_blob" or with_positions]
+        cols = ["term", "bucket", "codec", "df_chunk", "blob", "blocks"]
+        if with_positions:
+            cols.append("pos_blob")
         tbl = dset.to_table(columns=cols, filter=flt)
         # COLUMN-WISE materialization: per-block metadata stays numpy (one
         # flatten of the arrow list<struct> column) instead of ~blocks-many
-        # Python dicts per query — this was ~half of warm-query latency on
-        # hot terms. Per-chunk dict rows keep only scalars + numpy views.
+        # Python dicts per query. Each chunk row keeps only what the
+        # decoders read: blob, codec, per-block offsets/sizes/last docid
+        # (and pos_blob). The chunk-level impacts (i_tf/i_dl) are not
+        # read; the distributed block-max prune reads them from its scan.
         tbl = tbl.sort_by([("term", "ascending"), ("bucket", "ascending")])
-        nrows = tbl.num_rows
         terms_l = tbl.column("term").to_pylist()
-        buckets = tbl.column("bucket").to_pylist()
         codecs = tbl.column("codec").to_pylist()
         dfs = tbl.column("df_chunk").to_pylist()
         blobs = tbl.column("blob").to_pylist()
-        itf_rows = tbl.column("i_tf").to_pylist()
-        idl_rows = tbl.column("i_dl").to_pylist()
         pos_blobs = (
             tbl.column("pos_blob").to_pylist() if with_positions else None
         )
         bcol = tbl.column("blocks").combine_chunks()
         row_off = bcol.offsets.to_numpy().astype(np.int64)
+        # sv is a StructArray: .field() returns plain (non-chunked) arrays
         sv = bcol.values
         n_np = sv.field("n").to_numpy().astype(np.int64)
         last_np = sv.field("last_docid").to_numpy().astype(np.int64)
         og = sv.field("off_g").to_numpy().astype(np.int64)
         ot = sv.field("off_t").to_numpy().astype(np.int64)
         od = sv.field("off_d").to_numpy().astype(np.int64)
-        names = {f.name for f in sv.type}
         op = (
             sv.field("off_p").to_numpy().astype(np.int64)
-            if "off_p" in names
+            if "off_p" in {f.name for f in sv.type}
             else np.full(n_np.size, -1, dtype=np.int64)
         )
-        # sv is a StructArray: .field() returns plain (non-chunked) arrays
-        fitf = sv.field("i_tf")
-        fr_off_all = fitf.offsets.to_numpy().astype(np.int64)
-        fr_tf_all = fitf.values.to_numpy().astype(np.int64)
-        fr_dl_all = sv.field("i_dl").values.to_numpy().astype(np.int64)
-        from miru_spark.index.format import best_block_scores
-
         out: dict[str, TermPostings] = {}
-        for i in range(nrows):
+        for i, term in enumerate(terms_l):
             lo, hi = int(row_off[i]), int(row_off[i + 1])
-            flo, fhi = int(fr_off_all[lo]), int(fr_off_all[hi])
-            bm_meta = {
-                "n": n_np[lo:hi],
-                "last": last_np[lo:hi],
-                "off_g": og[lo:hi],
-                "off_t": ot[lo:hi],
-                "off_d": od[lo:hi],
-                "off_p": op[lo:hi],
-                # frontier views + the avgdl the bounds were baked under, so
-                # block_arrays can re-derive exact bounds under OTHER stats
-                "fr_off": fr_off_all[lo : hi + 1] - flo,
-                "fr_tf": fr_tf_all[flo:fhi],
-                "fr_dl": fr_dl_all[flo:fhi],
-                "avgdl": self.avgdl,
-                "best": best_block_scores(
-                    fr_off_all[lo : hi + 1] - flo,
-                    fr_tf_all[flo:fhi],
-                    fr_dl_all[flo:fhi],
-                    self.avgdl,
-                ),
-            }
             r = {
-                "term": terms_l[i],
-                "bucket": buckets[i],
                 "codec": codecs[i],
-                "df_chunk": dfs[i],
                 "blob": blobs[i],
-                "i_tf": itf_rows[i],
-                "i_dl": idl_rows[i],
-                "bm": bm_meta,
+                "bm": {
+                    "n": n_np[lo:hi],
+                    "last": last_np[lo:hi],
+                    "off_g": og[lo:hi],
+                    "off_t": ot[lo:hi],
+                    "off_d": od[lo:hi],
+                    "off_p": op[lo:hi],
+                },
             }
             if with_positions:
                 r["pos_blob"] = pos_blobs[i]
-            tp = out.get(r["term"])
+            tp = out.get(term)
             if tp is None:
-                tp = out[r["term"]] = TermPostings(term=r["term"], df=0.0, idf=0.0)
+                tp = out[term] = TermPostings(term=term, df=0.0, idf=0.0)
             tp.chunks.append(r)
-            tp.df += r["df_chunk"]
+            tp.df += dfs[i]
         for tp in out.values():
             tp.idf = float(bm25.idf_np(tp.df, float(self.n_docs)))
         return out

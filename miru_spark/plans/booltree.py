@@ -32,12 +32,10 @@ clause — a pure-negative query or ``a OR NOT b`` needs the full document
 set and is rejected, exactly as Lucene rejects must_not-only boolean
 queries at the top level.
 
-Block-max WAND deliberately does not apply here: per-term upper bounds are
-not monotone through an arbitrary tree (an AND subtree caps its branch at
-the MIN of its members' bounds only while all members are live), so the
-driver path scores candidates exhaustively — the distributed path is the
-scale route, and window-bounded re-ranking (``rescore``) is the latency
-route when the first pass must stay WAND.
+The driver path scores candidates exhaustively with numpy sorted-set
+algebra, the same discipline as ``search_topk``; the distributed path is
+the scale route, and window-bounded re-ranking (``rescore``) is the
+latency route when only a bounded head needs the tree.
 """
 
 from __future__ import annotations
@@ -413,12 +411,6 @@ def _eval(node: Node, env: _Env) -> tuple[np.ndarray, np.ndarray]:
     raise TypeError(f"cannot evaluate {node!r}")  # BNot handled by BAnd
 
 
-DISTRIBUTED_CUTOFF = 1 << 23
-"""Summed leaf df (positive AND NOT-side terms — the driver decodes both)
-above which ``strategy="auto"`` serves the tree from
-:func:`search_bool_distributed` instead of the driver, mirroring the
-WAND/exhaustive hybrid's postings-volume routing."""
-
 LAST_ROUTE = "driver"
 """Path taken by the last ``search_bool(strategy="auto")`` call."""
 
@@ -438,13 +430,16 @@ def search_bool(
     sum, non-matching subtrees contribute zero). ``where`` composes the
     usual metadata filter at the root. Tombstoned docs never match.
 
-    ``strategy``: ``"auto"`` (default) stays driver-side below
-    :data:`DISTRIBUTED_CUTOFF` summed leaf df and routes to
+    ``strategy``: ``"auto"`` (default) stays driver-side while the summed
+    leaf df (positive AND NOT-side terms — the driver decodes both) is at
+    most :data:`miru_spark.plans.search.EXHAUSTIVE_CUTOFF` and routes to
     :func:`search_bool_distributed` above it (collecting the k-row
     result — identical semantics, where= included); ``"driver"`` /
     ``"distributed"`` force a path.
     """
     global LAST_ROUTE
+    from miru_spark.plans.search import over_cutoff
+
     if strategy not in ("auto", "driver", "distributed"):
         raise ValueError(f"unknown strategy {strategy!r}")
     node = _as_node(query)
@@ -452,8 +447,7 @@ def search_bool(
         return []
     if strategy == "distributed" or (
         strategy == "auto"
-        and sum(reader.term_dfs(_leaf_terms(node)[0]).values())
-        > DISTRIBUTED_CUTOFF
+        and over_cutoff(reader.term_dfs(_leaf_terms(node)[0]).values())
     ):
         LAST_ROUTE = "distributed"
         rows = search_bool_distributed(

@@ -1,7 +1,7 @@
 """The flagship end-to-end query used by ``entry()``.
 
 Builds the binary inverted index on the given corpus (varint-compressed
-blocked posting lists, salted merge) and serves one block-max WAND BM25
+blocked posting lists, salted merge) and serves one driver BM25 top-k
 search, joining the top-k back to the docmap: the complete SURVEY.md
 section 3.1 + 3.2 lifecycle in one call.
 

@@ -16,10 +16,11 @@ Supported functions (each an ES twin):
 ``boost_mode`` combines that with the query score
 (``multiply | sum | replace``).
 
-Plan shape (and why there is no WAND path): an arbitrary score modifier
-breaks the monotone per-term upper bounds WAND relies on, so the honest
-plan scores the FULL candidate set — distributed BM25 scan -> broadcast
-join to the (doc_id, fields...) docmap projection -> function columns as
+Plan shape (and why there is no block-max skipping): an arbitrary score
+modifier breaks the monotone per-term upper bounds skipping relies on, so
+the honest plan scores the FULL candidate set — distributed BM25 scan ->
+broadcast join to the (doc_id, fields...) docmap projection -> function
+columns as
 built-in expressions (whole-stage codegen, no Python) -> one
 TakeOrderedAndProject. At cluster scale the candidate set is already the
 dominant cost of any scored query; the modifier adds a projection, not a

@@ -1,6 +1,6 @@
 """Index-path correctness entries for the driver.
 
-The binary-index fast paths (block-max WAND, galloping intersection, and the
+The binary-index serving paths (the driver's vectorized top-k kernel and the
 distributed DataFrame scorer) are checked against the SAME ANSI-SQL BM25
 oracle as the relational twin — proving index build + compression + merge +
 scoring end-to-end, not just the relational reformulation.
@@ -2608,7 +2608,7 @@ def register_all(register) -> None:
         ("bm25_index_random_score", _mk_random_score(),
          _random_score_oracle(), DS),
         # A79 rank_feature (ES rank_feature / Lucene FeatureQuery):
-        # ADDITIVE bounded static score — the WAND-preserving counterpart
+        # ADDITIVE bounded static score — the bound-preserving counterpart
         # to function_score's full-candidate reorder
         ("bm25_index_rank_feature",
          _mk_rank_feature(), _rank_feature_oracle(), DS),

@@ -51,10 +51,11 @@ with a vectorized per-doc cross product carrying exactly the DFS's
 running state and prune bounds — no per-candidate Python loop. The
 per-doc evaluator :func:`_eval_doc` stays as the semantics reference the
 batched path is fuzz-tested against. The driver-side path serves
-interactive queries; past :data:`DISTRIBUTED_CUTOFF` summed leaf df it
+interactive queries; past
+:data:`miru_spark.plans.search.EXHAUSTIVE_CUTOFF` summed leaf df it
 auto-routes to the distributed occurrence-join plan
-(:func:`search_intervals_distributed`), exactly as the WAND/exhaustive
-hybrid routes on postings volume.
+(:func:`search_intervals_distributed`), the same postings-volume routing
+``search_topk`` uses.
 """
 
 from __future__ import annotations
@@ -393,13 +394,6 @@ def _eval_tree_vec(
     raise TypeError(f"unknown interval node {type(spec).__name__}")
 
 
-DISTRIBUTED_CUTOFF = 1 << 23
-"""Summed leaf df above which ``strategy="auto"`` serves the query from
-the distributed occurrence-join plan instead of the driver: past ~8M
-postings the driver's fetch+decode dominates and the chunks stop fitting
-one node — the same postings-volume routing the WAND/exhaustive hybrid
-uses (``search._route_query``)."""
-
 LAST_ROUTE = "driver"
 """Which path the last ``search_intervals(strategy="auto")`` call took
 (``"driver"`` | ``"distributed"``) — observability for tests and bench."""
@@ -417,14 +411,14 @@ def search_intervals(
     BM25 sum over the tree's distinct leaf terms (score desc, doc_id asc).
 
     ``strategy``: ``"auto"`` (default) serves driver-side below
-    :data:`DISTRIBUTED_CUTOFF` summed leaf df and routes to
-    :func:`search_intervals_distributed` above it (collecting the k-row
-    result); ``"driver"`` / ``"distributed"`` force a path. ``where``
-    pins the driver path (the distributed plan doesn't carry metadata
-    filters).
+    :data:`miru_spark.plans.search.EXHAUSTIVE_CUTOFF` summed leaf df and
+    routes to :func:`search_intervals_distributed` above it (collecting
+    the k-row result); ``"driver"`` / ``"distributed"`` force a path.
+    ``where`` pins the driver path (the distributed plan doesn't carry
+    metadata filters).
     """
     global LAST_ROUTE
-    from miru_spark.plans.search import _with_tombstones
+    from miru_spark.plans.search import _with_tombstones, over_cutoff
 
     if strategy not in ("auto", "driver", "distributed"):
         raise ValueError(f"unknown strategy {strategy!r}")
@@ -441,7 +435,7 @@ def search_intervals(
     if strategy == "distributed" or (
         strategy == "auto"
         and where is None
-        and sum(reader.term_dfs(terms).values()) > DISTRIBUTED_CUTOFF
+        and over_cutoff(reader.term_dfs(terms).values())
     ):
         LAST_ROUTE = "distributed"
         rows = search_intervals_distributed(

@@ -4,17 +4,15 @@
 pagerank, stars, recency distance — to the BM25 relevance of matching
 docs, the ``bool {must: match, should: rank_feature}`` shape.
 
-The scale point, and the contrast with A52 function_score: an arbitrary
-multiplicative modifier breaks WAND's monotone per-term bounds, so
-function_score honestly scores the FULL candidate set. An *additive*
-feature with a known corpus-wide maximum does NOT break them — inflating
-every upper bound by ``max(contrib)`` keeps ``ub`` a true upper bound on
-the final score, so block-max skipping stays exact. That is exactly why
-Lucene ships these as dedicated queries instead of telling users to use
-FunctionScoreQuery: they are the static-score shapes that keep top-k
-pruning. Here the driver path threads a dense ``bonus`` array (one float
-per doc, built once per (reader, feature) from a projected docmap scan)
-through WAND / galloping / exhaustive; the distributed path adds the
+The contrast with A52 function_score: an arbitrary multiplicative
+modifier breaks BM25's monotone per-term bounds, while an *additive*
+feature with a known corpus-wide maximum keeps them — inflating every
+upper bound by ``max(contrib)`` keeps it a true bound on the final score.
+That is why Lucene ships these as dedicated queries instead of telling
+users to use FunctionScoreQuery: they are the static-score shapes that
+keep top-k pruning. Here the driver path adds a dense ``bonus`` array
+(one float per doc, built once per (reader, feature) from a projected
+docmap scan) to the vectorized scores; the distributed path adds the
 feature as a codegen expression after the candidate aggregation.
 
 Kernels (the ES parameterizations):
@@ -22,8 +20,8 @@ Kernels (the ES parameterizations):
 * ``saturation``  — ``boost * f / (f + pivot)``, bounded by ``boost``.
 * ``sigmoid``     — ``boost * f^exp / (f^exp + pivot^exp)``, bounded.
 * ``log``         — ``boost * ln(scaling_factor + f)``, unbounded in
-  general but bounded over any concrete corpus; the driver path uses the
-  measured ``contrib.max()`` as the WAND inflation, which is exact.
+  general but bounded over any concrete corpus (the measured
+  ``contrib.max()``).
 * ``DistanceFeature`` — ``boost * pivot / (pivot + |f - origin|)``,
   1·boost at the origin, half at distance ``pivot`` (ES distance_feature
   over a numeric field).
@@ -179,19 +177,20 @@ def search_rank_feature(
     feature,
     mode: str = "disjunctive",
     k: int = 10,
-    strategy: str = "auto",
     exclude: list[str] | None = None,
     boosts: dict[str, float] | None = None,
     where: dict | None = None,
     min_match: int | None = None,
 ) -> list[tuple[int, float]]:
-    """Driver fast path: BM25 + additive feature, served by the SAME
-    WAND / galloping / exhaustive machinery (``search_topk(feature=...)``)
-    with every upper bound inflated by the feature's corpus maximum."""
+    """Driver path: BM25 + additive feature, served by the SAME vectorized
+    kernel as plain queries (``search_topk(feature=...)``), which adds the
+    dense per-doc contribution to the summed BM25 scores. Feature queries
+    stay on the driver at every size; the cluster path is
+    :func:`search_rank_feature_distributed`."""
     from miru_spark.plans.search import search_topk
 
     return search_topk(
-        reader, terms, mode=mode, k=k, strategy=strategy, exclude=exclude,
+        reader, terms, mode=mode, k=k, exclude=exclude,
         boosts=boosts, where=where, min_match=min_match, feature=feature,
     )
 

@@ -45,8 +45,8 @@ def oracle_sql() -> dict[str, str]:
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build index on the given corpus, search via block-max WAND, return
-    top-k joined back to the docmap."""
+    """Build index on the given corpus, search via the driver top-k kernel,
+    return top-k joined back to the docmap."""
     from miru_spark.plans.flagship import flagship_search
 
     return flagship_search(spark, sf_dir)

@@ -12,7 +12,7 @@ match the rescore query keep their first-pass score (phrase term = 0).
 This is the counterpart to function_score's full-candidate plan: when
 the modifier only needs to reorder a bounded head, rescore touches
 exactly ``window_size`` docs in the second pass. At cluster scale the
-first pass is the existing WAND/block-max top-k (early-terminating); the
+first pass is the existing ``search_topk`` (routed by summed df); the
 second pass is a positional-index phrase verification over at most
 ``window_size`` candidates — driver-side arithmetic on two already-small
 result sets, no extra Spark job beyond the two searches.
@@ -36,8 +36,8 @@ def rescore_topk(
     exclude: list[str] | None = None,
     where: dict | None = None,
 ) -> list[tuple[int, float]]:
-    """Two-phase serving: first-pass BM25 top-``window_size`` (WAND fast
-    path), second-pass phrase BM25 restricted to the window, weighted-sum
+    """Two-phase serving: first-pass BM25 top-``window_size``
+    (``search_topk``), second-pass phrase BM25 restricted to the window, weighted-sum
     combine, final top-k by (-score, doc_id)."""
     from miru_spark.plans.search import search_phrase, search_topk
 

@@ -1,23 +1,23 @@
 """A14-A21 — query serving over the binary index.
 
-Three paths, all rank-identical by construction and by test:
+Two paths, rank-identical by construction and by test:
 
-* ``search_topk`` (driver fast path): fetch the query terms' chunk rows
-  (pruned scan), then block-max WAND for disjunctive queries / galloping
-  intersection for conjunctive ones. For 2-10 query terms this touches a
-  handful of bounded rows — at any corpus scale — because hot terms are
-  chunked and WAND never decodes blocks it can prove irrelevant.
-* ``search_exhaustive``: full decode + vectorized numpy scoring; the safety
-  twin used by the BMW==exhaustive property tests.
+* ``search_topk`` (driver path): fetch the query terms' chunk rows (pruned
+  scan), decode every posting and score whole columns at once with numpy
+  (``_exhaustive_from_tps``). For the few hundred thousand postings an
+  interactive query touches this is a few milliseconds; a per-posting
+  Python skip loop (block-max WAND) cost several times that, so there is
+  none. ``search_exhaustive`` is the same kernel without routing.
 * ``search_distributed``: the same scoring as a pure DataFrame plan over the
-  chunk rows (mapInArrow decode -> groupBy(doc_id) -> top-k); the path you run
-  when a query's candidate set is too large to collect (cluster-scale OR of
-  hot terms), and the one the DuckDB oracle checks directly.
+  chunk rows (mapInArrow decode -> groupBy(doc_id) -> top-k), with
+  block-max chunk pruning; the path a query takes once its summed df passes
+  :data:`EXHAUSTIVE_CUTOFF` (cluster-scale OR of hot terms), and the one
+  the DuckDB oracle checks directly.
 """
 
 from __future__ import annotations
 
-import heapq
+import functools
 import re
 from collections.abc import Iterator
 
@@ -33,311 +33,27 @@ from miru_spark.functions import bm25
 from miru_spark.index.format import unpack_chunk_bm
 from miru_spark.index.reader import IndexReader, TermPostings
 
-_EXHAUSTED = 1 << 62
 _EPS = 1e-12
-
-
-class PostingIterator:
-    """Lazy cursor over one term's chunk rows; decodes one block at a time."""
-
-    __slots__ = (
-        "idf", "avgdl", "term_max", "blk_last", "blk_max", "_srcs",
-        "_chunk_id", "_local_j", "_prev_last", "n_blocks",
-        "bi", "pos", "_ids", "_tfs", "_dls", "exhausted",
-    )
-
-    def __init__(self, tp: TermPostings, avgdl: float):
-        self.idf = tp.idf
-        self.avgdl = avgdl
-        self.term_max = tp.max_score(avgdl)
-        # fully vectorized block metadata: lasts/bounds concatenated by the
-        # reader (numpy views over the arrow fetch), (chunk, local) index
-        # mapping built with repeat/arange — no per-block Python until a
-        # block is actually decoded
-        self.blk_last, self.blk_max, self._srcs = tp.block_arrays(avgdl)
-        sizes = [src[1]["n"].size for src in self._srcs]
-        self.n_blocks = int(sum(sizes))
-        self._chunk_id = np.repeat(np.arange(len(sizes), dtype=np.int64), sizes)
-        starts = np.concatenate(([0], np.cumsum(sizes)[:-1])).astype(np.int64) \
-            if sizes else np.empty(0, dtype=np.int64)
-        self._local_j = (
-            np.arange(self.n_blocks, dtype=np.int64) - np.repeat(starts, sizes)
-        )
-        # block j's docid base = previous block's last docid (0 at chunk start)
-        self._prev_last = np.empty(self.n_blocks, dtype=np.int64)
-        if self.n_blocks:
-            self._prev_last[1:] = self.blk_last[:-1]
-            self._prev_last[starts] = 0
-        self.bi = -1
-        self.pos = 0
-        self._ids = self._tfs = self._dls = None
-        self.exhausted = self.n_blocks == 0
-        if not self.exhausted:
-            self._load(0)
-
-    def _load(self, bi: int) -> None:
-        from miru_spark.index.format import unpack_block_bm
-
-        blob, bm, codec = self._srcs[int(self._chunk_id[bi])]
-        ids, tfs, dls = unpack_block_bm(
-            blob, bm, int(self._local_j[bi]), int(self._prev_last[bi]), codec
-        )
-        self._ids = ids.astype(np.int64)
-        self._tfs = tfs
-        self._dls = dls
-        self.bi = bi
-        self.pos = 0
-
-    @property
-    def cur_docid(self) -> int:
-        return _EXHAUSTED if self.exhausted else int(self._ids[self.pos])
-
-    def next(self) -> None:
-        self.pos += 1
-        if self.pos >= self._ids.size:
-            if self.bi + 1 >= self.n_blocks:
-                self.exhausted = True
-            else:
-                self._load(self.bi + 1)
-
-    def seek(self, target: int) -> None:
-        """Advance to first docid >= target (gallop: block index via
-        searchsorted on last_docids, then within-block searchsorted)."""
-        if self.exhausted or self.cur_docid >= target:
-            return
-        j = int(np.searchsorted(self.blk_last, target))
-        if j >= self.n_blocks:
-            self.exhausted = True
-            return
-        if j != self.bi:
-            self._load(j)
-        self.pos = int(np.searchsorted(self._ids, target, side="left"))
-        if self.pos >= self._ids.size:  # cannot happen: blk_last[j] >= target
-            self.next()
-
-    def block_bound(self, docid: int) -> tuple[float, int]:
-        """(max_score, last_docid) of the block that would contain docid —
-        WITHOUT decoding it (the shallow pointer of BMW)."""
-        j = int(np.searchsorted(self.blk_last, docid))
-        if j >= self.n_blocks:
-            return 0.0, _EXHAUSTED
-        return float(self.blk_max[j]), int(self.blk_last[j])
-
-    def score_current(self) -> float:
-        tf = float(self._tfs[self.pos])
-        dl = float(self._dls[self.pos])
-        norm = tf + bm25.K1 * (1.0 - bm25.B + bm25.B * dl / self.avgdl)
-        return self.idf * tf * (bm25.K1 + 1.0) / norm
-
-
-def _topk_sorted(heap: list[tuple[float, int]], k: int) -> list[tuple[int, float]]:
-    best = sorted(heap, key=lambda t: (-t[0], -t[1]))[:k]
-    return [(-negid, score) for score, negid in best]
-
-
-def _is_excluded(excl: np.ndarray | None, docid: int) -> bool:
-    if excl is None:
-        return False
-    j = int(np.searchsorted(excl, docid))
-    return j < excl.size and int(excl[j]) == docid
-
-
-def _bonus_at(bonus: np.ndarray | None, docid: int) -> float:
-    """Per-doc additive static score (A79 rank_feature); docs past the
-    dense array's end (never possible for a docmap-built array, but cheap
-    to guard) contribute 0 like a missing feature."""
-    if bonus is None or docid >= bonus.size:
-        return 0.0
-    return float(bonus[docid])
-
-
-def _cursor_ok(
-    after: tuple[float, int] | None, score: float, docid: int
-) -> bool:
-    """search_after eligibility (A38, Lucene IndexSearcher.searchAfter):
-    a hit qualifies only if it sorts strictly AFTER the cursor in the
-    result order (score desc, doc_id asc). Scores within ``_EPS`` of the
-    cursor's are ties broken by doc_id — BM25 recomputes bit-identically
-    for the same doc within one path, but the iterator and vectorized
-    paths may differ in summation order by an ulp, so exact float
-    equality would make the page boundary path-dependent."""
-    if after is None:
-        return True
-    s, d = after
-    return score < s - _EPS or (score <= s + _EPS and docid > d)
-
-
-def _is_eligible(
-    incl: np.ndarray | None, excl: np.ndarray | None, docid: int
-) -> bool:
-    """Candidate eligibility: inside the metadata-filter allowlist (A34,
-    None = unfiltered) and not excluded (boolean NOT / tombstones). Both
-    checks are applied at heap-insert time, which keeps WAND's theta a
-    valid lower bound over eligible docs — skipping an ineligible pivot
-    without scoring can only raise future thetas."""
-    if incl is not None:
-        j = int(np.searchsorted(incl, docid))
-        if j >= incl.size or int(incl[j]) != docid:
-            return False
-    return not _is_excluded(excl, docid)
-
-
-def wand_topk(
-    iters: list[PostingIterator],
-    k: int,
-    excl: np.ndarray | None = None,
-    incl: np.ndarray | None = None,
-    after: tuple[float, int] | None = None,
-    min_match: int = 1,
-    bonus: np.ndarray | None = None,
-) -> list[tuple[int, float]]:
-    """Block-max WAND (Ding & Suel 2011) over per-term lazy iterators.
-
-    Heap entries are (score, -doc_id); ties on score are won by the smaller
-    doc_id, which the ascending iteration order makes automatic. Skipping
-    with ``ub <= theta`` is tie-safe once the heap is full because any future
-    doc has a larger doc_id than every heap entry and so loses exact ties.
-
-    ``min_match`` (ES minimum_should_match): a doc qualifies only when at
-    least that many distinct query terms hit it; its score still sums over
-    ALL its matching terms. Enforced at heap-insert like NOT/filters, so
-    theta stays a valid bound over qualifying docs and block-skipping stays
-    safe; once fewer than min_match iterators remain alive no doc can
-    qualify and the loop stops.
-
-    ``bonus`` (A79 rank_feature / distance_feature): a dense per-doc
-    additive static score. Every upper bound — pivot selection and the
-    block-max skip test — is inflated by ``bmax = max(bonus)``, so ``ub``
-    stays a true upper bound on the FINAL score (bm25 + bonus) and
-    block skipping stays exact; the actual per-doc bonus (<= bmax by
-    construction) is added at scoring time. This is precisely why
-    Lucene's FeatureQuery keeps top-k pruning where FunctionScoreQuery
-    cannot: additive-and-bounded preserves the monotone bound.
-    """
-    bmax = (
-        float(bonus.max()) if bonus is not None and bonus.size else 0.0
-    )
-    heap: list[tuple[float, int]] = []
-    iters = [it for it in iters if not it.exhausted]
-    while iters:
-        iters = [it for it in iters if not it.exhausted]
-        if len(iters) < min_match or not iters:
-            break
-        iters.sort(key=lambda it: it.cur_docid)
-        theta = heap[0][0] if len(heap) >= k else -np.inf
-        acc = bmax
-        pivot_idx = -1
-        for i, it in enumerate(iters):
-            acc += it.term_max
-            if acc > theta - _EPS:
-                pivot_idx = i
-                break
-        if pivot_idx < 0:
-            break
-        pivot = iters[pivot_idx].cur_docid
-        if pivot >= _EXHAUSTED:
-            break
-        # extend the pivot group across iterators tied at the pivot docid:
-        # they contribute to the pivot doc's score, so the block-max upper
-        # bound must include them or skipping is unsafe
-        while (
-            pivot_idx + 1 < len(iters)
-            and iters[pivot_idx + 1].cur_docid == pivot
-        ):
-            pivot_idx += 1
-        if iters[0].cur_docid == pivot:
-            bounds = [it.block_bound(pivot) for it in iters[: pivot_idx + 1]]
-            ub = sum(b[0] for b in bounds) + bmax
-            if len(heap) >= k and ub <= theta - _EPS:
-                nxt = min(b[1] for b in bounds) + 1
-                if pivot_idx + 1 < len(iters):
-                    nxt = min(nxt, iters[pivot_idx + 1].cur_docid)
-                nxt = max(nxt, pivot + 1)
-                for it in iters[: pivot_idx + 1]:
-                    it.seek(nxt)
-                continue
-            # ineligible pivots (boolean NOT / metadata filter) advance
-            # without scoring; they never enter the heap, so theta stays a
-            # valid lower bound over eligible docs and block-skipping stays
-            # safe
-            if _is_eligible(incl, excl, pivot):
-                score = _bonus_at(bonus, pivot)
-                n_matched = 0
-                for it in iters:
-                    if it.cur_docid == pivot:
-                        score += it.score_current()
-                        n_matched += 1
-                # pre-cursor docs never enter the heap, so theta stays a
-                # valid bound over the page's eligible docs (same argument
-                # as NOT / metadata filters above)
-                if n_matched >= min_match and _cursor_ok(after, score, pivot):
-                    entry = (score, -pivot)
-                    if len(heap) < k:
-                        heapq.heappush(heap, entry)
-                    elif entry > heap[0]:
-                        heapq.heapreplace(heap, entry)
-            for it in iters:
-                if it.cur_docid == pivot:
-                    it.next()
-        else:
-            for it in iters[:pivot_idx]:
-                it.seek(pivot)
-    return _topk_sorted(heap, k)
-
-
-def conjunctive_topk(
-    iters: list[PostingIterator],
-    k: int,
-    excl: np.ndarray | None = None,
-    incl: np.ndarray | None = None,
-    after: tuple[float, int] | None = None,
-    bonus: np.ndarray | None = None,
-) -> list[tuple[int, float]]:
-    """Galloping k-list intersection driven by the rarest term (A16).
-    ``bonus`` adds the A79 per-doc static score at scoring time (the
-    intersection scores every surviving doc, so no bound logic needed)."""
-    if not iters or any(it.exhausted for it in iters):
-        return []
-    heap: list[tuple[float, int]] = []
-    iters = sorted(iters, key=lambda it: it.blk_last.size)  # rarest first
-    lead = iters[0]
-    while not lead.exhausted:
-        docid = lead.cur_docid
-        matched = True
-        for it in iters[1:]:
-            it.seek(docid)
-            if it.exhausted:
-                return _topk_sorted(heap, k)
-            if it.cur_docid != docid:
-                lead.seek(it.cur_docid)
-                matched = False
-                break
-        if not matched:
-            continue
-        if _is_eligible(incl, excl, docid):
-            score = sum(it.score_current() for it in iters) + _bonus_at(
-                bonus, docid
-            )
-            if _cursor_ok(after, score, docid):
-                entry = (score, -docid)
-                if len(heap) < k:
-                    heapq.heappush(heap, entry)
-                elif entry > heap[0]:
-                    heapq.heapreplace(heap, entry)
-        lead.next()
-    return _topk_sorted(heap, k)
 
 
 # ----------------------------------------------------------- entry points --
 
-# Below this many total postings, one vectorized numpy pass beats the
-# skip-capable iterator walk: vectorized decode+score costs ~30ns/posting
-# while the Python iterator costs ~2us/posting, so WAND only wins when
-# block skipping eliminates >98% of postings — which needs genuinely
-# heterogeneous score distributions AND a large corpus. 8M postings is
-# ~200MB of driver arrays; beyond that (or beyond driver memory), use
-# search_distributed, which is the cluster-scale path anyway.
+# The one routing cutoff: a driver query whose terms' summed df passes it
+# leaves the driver for its distributed plan (search_topk and search_many
+# for search_distributed, search_phrase, booltree.search_bool and
+# intervals.search_intervals for their own). The value is a chosen
+# driver-memory policy, not a measured crossover: on a 1M-doc Zipf corpus
+# (4 cores) the driver kernel still beat search_distributed at 8.4M
+# postings (1.1 s vs 3.7 s disjunctive, 1.2 s vs 4.3 s conjunctive) and
+# peaked ~650 MB above its base RSS (scripts/route_crossover.py,
+# BENCH/route_crossover.json).
 EXHAUSTIVE_CUTOFF = 1 << 23
+
+
+def over_cutoff(dfs) -> bool:
+    """True when the summed df ``dfs`` passes :data:`EXHAUSTIVE_CUTOFF`
+    (read at call time, so one monkeypatch moves every router)."""
+    return sum(dfs) > EXHAUSTIVE_CUTOFF
 
 
 def parse_query(query: str) -> tuple[list[str], str, list[str]]:
@@ -738,7 +454,6 @@ def search_prefix(
     prefix: str,
     k: int = 10,
     max_terms: int = 1024,
-    strategy: str = "auto",
 ) -> list[tuple[int, float]]:
     """Prefix query ``prefix*`` — Lucene-style scoring-boolean rewrite:
     expand against the sorted term dictionary, then disjunctive BM25 over
@@ -746,7 +461,7 @@ def search_prefix(
     terms = reader.expand_prefix(prefix, max_terms=max_terms)
     if not terms:
         return []
-    return search_topk(reader, terms, mode="disjunctive", k=k, strategy=strategy)
+    return search_topk(reader, terms, mode="disjunctive", k=k)
 
 
 def search_term_range(
@@ -757,7 +472,6 @@ def search_term_range(
     include_hi: bool = True,
     k: int = 10,
     max_terms: int = 1024,
-    strategy: str = "auto",
 ) -> list[tuple[int, float]]:
     """Term range query (Lucene TermRangeQuery / ES range on a keyword
     field): every vocabulary term lexicographically within [lo, hi]
@@ -772,7 +486,7 @@ def search_term_range(
     )
     if not terms:
         return []
-    return search_topk(reader, terms, mode="disjunctive", k=k, strategy=strategy)
+    return search_topk(reader, terms, mode="disjunctive", k=k)
 
 
 def search_fuzzy(
@@ -781,7 +495,6 @@ def search_fuzzy(
     max_edits: int = 1,
     k: int = 10,
     max_terms: int = 1024,
-    strategy: str = "auto",
     transpositions: bool = False,
 ) -> list[tuple[int, float]]:
     """Fuzzy query ``term~`` — expand to vocabulary terms within
@@ -800,7 +513,7 @@ def search_fuzzy(
     )
     if not terms:
         return []
-    return search_topk(reader, terms, mode="disjunctive", k=k, strategy=strategy)
+    return search_topk(reader, terms, mode="disjunctive", k=k)
 
 
 def search_regex(
@@ -808,7 +521,6 @@ def search_regex(
     pattern: str,
     k: int = 10,
     max_terms: int = 1024,
-    strategy: str = "auto",
 ) -> list[tuple[int, float]]:
     """Regex term query (grep-style, the code-search staple): expand the
     pattern against the term dictionary (literal-prefix pruned), then
@@ -818,7 +530,7 @@ def search_regex(
     terms = reader.expand_regex(pattern, max_terms=max_terms)
     if not terms:
         return []
-    return search_topk(reader, terms, mode="disjunctive", k=k, strategy=strategy)
+    return search_topk(reader, terms, mode="disjunctive", k=k)
 
 
 def suggest_spelling(
@@ -1271,7 +983,7 @@ def explain(
     tps = _apply_boosts(reader.fetch_terms(terms), boosts)
     boosts = boosts or {}
     tomb = _with_tombstones(reader, None)
-    deleted = _is_excluded(tomb, int(doc_id))
+    deleted = tomb is not None and bool(np.isin(int(doc_id), tomb))
     details = []
     total, nmatch = 0.0, 0
     for t in terms:
@@ -2487,11 +2199,10 @@ def _check_exclude(terms: list[str], exclude) -> list[str]:
 
 
 def _apply_boosts(tps: dict, boosts: dict[str, float] | None) -> dict:
-    """Per-term boosts scale the term's idf — every downstream quantity
-    (score contributions, term_max, block-max impact bounds) is linear in
-    idf, so WAND's upper bounds stay exact under boosting. Returns boosted
-    COPIES; the input TermPostings (possibly shared by a batch) are never
-    mutated."""
+    """Per-term boosts scale the term's idf, and a term's BM25
+    contribution is linear in its idf, so a boosted term scores exactly
+    ``boost`` times its plain contribution. Returns boosted COPIES; the
+    input TermPostings (possibly shared by a batch) are never mutated."""
     if not boosts:
         return tps
     for t, b in boosts.items():
@@ -2532,7 +2243,6 @@ def search_topk(
     terms: list[str],
     mode: str = "conjunctive",
     k: int = 10,
-    strategy: str = "auto",
     exclude: list[str] | None = None,
     boosts: dict[str, float] | None = None,
     where: dict | None = None,
@@ -2540,26 +2250,30 @@ def search_topk(
     min_match: int | None = None,
     feature=None,
 ) -> list[tuple[int, float]]:
-    """Serve one query from the binary index (driver fast path).
+    """Serve one query from the binary index.
 
-    Hybrid strategy (``auto``): tiny candidate sets take the fully-
-    vectorized exhaustive decoder; larger ones take block-max WAND
-    (disjunctive) or galloping intersection (conjunctive). Both produce
-    identical rankings (fuzz-tested), so the switch is purely a latency
-    decision. ``strategy`` in {auto, wand, exhaustive} forces a path
-    (tests use this to pin WAND). ``exclude`` = boolean NOT: docs containing
-    any excluded term are dropped (posting-list difference). ``where`` =
-    metadata filter (A34): ``{"lang": "py"}`` / ``{"repo": [..]}``
-    restricts results to docs whose docmap row matches; resolved by a
-    pushed-down docmap scan and enforced at heap-insert time (Lucene
-    filtered-query semantics — filtered docs never enter the heap, scores
-    of surviving docs are unchanged). ``after`` = keyset pagination (A38,
-    Lucene searchAfter / ES search_after): pass the LAST hit of the
-    previous page as ``(score, doc_id)`` and only docs sorting strictly
-    after it (score desc, doc_id asc) are returned — deep pages never
-    re-materialize earlier ones (no from+size over-fetch), and a
-    concurrent refresh can't shift page boundaries the way offset
-    pagination does.
+    One pruned fetch of the query terms' chunk rows, then one routing
+    decision on their summed df: at or below :data:`EXHAUSTIVE_CUTOFF` the
+    driver decodes every posting and scores the columns with numpy
+    (``_exhaustive_from_tps``); above it the query goes to
+    ``search_distributed(..., round_digits=None)`` and its k rows are
+    collected. Queries with ``min_match > 1`` or a ``feature`` stay on the
+    driver kernel at every size: the distributed plan takes neither, so
+    the cutoff does not bound their driver memory.
+
+    ``exclude`` = boolean NOT: docs containing any excluded term are
+    dropped (posting-list difference). ``where`` = metadata filter (A34):
+    ``{"lang": "py"}`` / ``{"repo": [..]}`` restricts results to docs whose
+    docmap row matches; on the driver kernel resolved by a pushed-down
+    docmap scan, past the cutoff a semi-join in the distributed plan
+    (Lucene filtered-query semantics — scores of surviving docs are
+    unchanged).
+    ``after`` = keyset pagination (A38, Lucene searchAfter / ES
+    search_after): pass the LAST hit of the previous page as ``(score,
+    doc_id)`` and only docs sorting strictly after it (score desc, doc_id
+    asc) are returned — deep pages never re-materialize earlier ones (no
+    from+size over-fetch), and a concurrent refresh can't shift page
+    boundaries the way offset pagination does.
     """
     if mode not in ("conjunctive", "disjunctive"):
         raise ValueError(f"unknown mode {mode!r}")
@@ -2569,21 +2283,16 @@ def search_topk(
     terms = list(dict.fromkeys(terms))
     exclude = _check_exclude(terms, exclude)
     tps = _apply_boosts(reader.fetch_terms(terms), boosts)
-    excl = _exclusion_ids(reader, exclude)
-    incl = reader.filter_doc_ids(where) if where else None
-    if incl is not None and incl.size == 0:
-        return []
     bonus = None
     if feature is not None:
         # A79 rank_feature / distance_feature: a dense per-doc additive
-        # static score; every serving strategy stays exact (WAND bounds
-        # are inflated by its corpus max inside wand_topk)
+        # static score
         from miru_spark.plans.rankfeature import contrib_array
 
         bonus = contrib_array(reader, feature)
     return _route_query(
-        reader, tps, terms, mode, k, strategy, excl, incl=incl, after=after,
-        min_match=mm, bonus=bonus,
+        reader, tps, terms, mode, k, exclude=exclude, boosts=boosts,
+        where=where, after=after, min_match=mm, bonus=bonus,
     )
 
 
@@ -2599,47 +2308,46 @@ def _with_tombstones(reader, excl: np.ndarray | None) -> np.ndarray | None:
 
 
 def _route_query(
-    reader, tps, terms, mode, k, strategy, excl=None, decode_cache=None,
-    incl=None, after=None, min_match=1, bonus=None,
+    reader, tps, terms, mode, k, exclude=(), boosts=None, where=None,
+    allowlist=None, after=None, min_match=1, bonus=None, decode_cache=None,
 ) -> list[tuple[int, float]]:
-    """Pick the serving strategy for one query given already-fetched
-    TermPostings (shared by search_topk and search_many)."""
-    excl = _with_tombstones(reader, excl)
+    """Serve one query from already-fetched (and boosted) TermPostings —
+    shared by search_topk and search_many. The distributed plan semi-joins
+    ``where`` itself; only the driver branch resolves it to an allowlist
+    (``allowlist()`` when given, so search_many resolves it once)."""
     if mode == "conjunctive" and len([t for t in terms if t in tps]) < len(terms):
         return []  # a term matches nothing -> empty intersection
-    total_postings = sum(tps[t].df for t in terms if t in tps)
-    if strategy == "exhaustive" or (
-        strategy == "auto" and total_postings <= EXHAUSTIVE_CUTOFF
+    if min_match == 1 and bonus is None and over_cutoff(
+        tps[t].df for t in terms if t in tps
     ):
-        return _exhaustive_from_tps(
-            reader, tps, terms, mode, k, excl=excl, decode_cache=decode_cache,
-            incl=incl, after=after, min_match=min_match, bonus=bonus,
-        )
-    iters = [PostingIterator(tps[t], reader.avgdl) for t in terms if t in tps]
-    if mode == "conjunctive":
-        return conjunctive_topk(
-            iters, k, excl=excl, incl=incl, after=after, bonus=bonus
-        )
-    if mode == "disjunctive":
-        return wand_topk(
-            iters, k, excl=excl, incl=incl, after=after, min_match=min_match,
-            bonus=bonus,
-        )
-    raise ValueError(f"unknown mode {mode!r}")
+        rows = search_distributed(
+            reader, terms, mode=mode, k=k, round_digits=None,
+            exclude=exclude, boosts=boosts, where=where, after=after,
+        ).collect()
+        return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+    incl = None
+    if where:
+        incl = allowlist() if allowlist else reader.filter_doc_ids(where)
+        if incl.size == 0:
+            return []
+    excl = _with_tombstones(reader, _exclusion_ids(reader, exclude))
+    return _exhaustive_from_tps(
+        reader, tps, terms, mode, k, excl=excl, decode_cache=decode_cache,
+        incl=incl, after=after, min_match=min_match, bonus=bonus,
+    )
 
 
 def search_many(
     reader: IndexReader,
     queries: list[tuple[list[str], str]],
     k: int = 10,
-    strategy: str = "auto",
     where: dict | None = None,
 ) -> list[list[tuple[int, float]]]:
     """Serve a batch of (terms, mode) queries with ONE pruned postings
     fetch for the union of all query terms, and ONE decode per term.
 
-    The driver fast path's latency is dominated by the pyarrow read plus
-    the per-term posting decode; a batch that shares terms (real workloads
+    The driver path's latency is dominated by the pyarrow read plus the
+    per-term posting decode; a batch that shares terms (real workloads
     are Zipfian) pays both once — terms shared by many queries decode a
     single time into a shared cache. Results are identical to per-query
     ``search_topk`` (same routing, same TermPostings), tested against it.
@@ -2654,9 +2362,7 @@ def search_many(
         dict.fromkeys(t for terms, _ in queries for t in terms)
     )
     tps = reader.fetch_terms(all_terms)
-    incl = reader.filter_doc_ids(where) if where else None
-    if incl is not None and incl.size == 0:
-        return [[] for _ in queries]
+    allowlist = functools.cache(lambda: reader.filter_doc_ids(where))
     cache: dict[str, tuple] = {}
     out = []
     for terms, mode in queries:
@@ -2665,8 +2371,8 @@ def search_many(
         terms = list(dict.fromkeys(terms))
         out.append(
             _route_query(
-                reader, tps, terms, mode, k, strategy,
-                decode_cache=cache, incl=incl,
+                reader, tps, terms, mode, k, where=where,
+                allowlist=allowlist, decode_cache=cache,
             )
         )
     return out
@@ -2769,7 +2475,8 @@ def search_exhaustive(
     after: tuple[float, int] | None = None,
     min_match: int | None = None,
 ) -> list[tuple[int, float]]:
-    """Decode-everything scoring (vectorized numpy); the WAND safety twin."""
+    """The driver kernel of :func:`search_topk` without its routing: every
+    query decodes and scores on the driver, whatever its size."""
     if mode not in ("conjunctive", "disjunctive"):
         raise ValueError(f"unknown mode {mode!r}")
     if k <= 0:
@@ -2826,7 +2533,7 @@ def _exhaustive_from_tps(
         uids, agg = uids[keep], agg[keep]
     if bonus is not None and uids.size:
         # A79 additive static score, applied before the cursor filter so
-        # search_after compares FINAL scores (same value the heap paths use)
+        # search_after compares FINAL scores
         b = np.zeros(uids.size)
         m = uids < bonus.size
         b[m] = bonus[uids[m]]
@@ -2892,10 +2599,6 @@ def survivor_docs(keys: np.ndarray) -> np.ndarray:
     return np.unique(keys >> np.uint64(32)).astype(np.int64)
 
 
-PHRASE_DISTRIBUTED_CUTOFF = 1 << 23
-"""Summed phrase-term df above which ``strategy="auto"`` routes
-:func:`search_phrase` to the distributed occurrence-join plan."""
-
 LAST_PHRASE_ROUTE = "driver"
 """Path taken by the last ``search_phrase(strategy="auto")`` call."""
 
@@ -2920,7 +2623,7 @@ def search_phrase(
     Requires an index built with ``positions=True``.
 
     ``strategy``: ``"auto"`` (default) stays driver-side below
-    :data:`PHRASE_DISTRIBUTED_CUTOFF` summed term df and routes to
+    :data:`EXHAUSTIVE_CUTOFF` summed term df and routes to
     :func:`search_phrase_distributed` above it (collecting the k-row
     result); ``"driver"`` / ``"distributed"`` force a path. ``where``
     pins the driver path (the distributed plan doesn't carry metadata
@@ -2947,8 +2650,7 @@ def search_phrase(
     if strategy == "distributed" or (
         strategy == "auto"
         and where is None
-        and sum(reader.term_dfs(list(dict.fromkeys(seq))).values())
-        > PHRASE_DISTRIBUTED_CUTOFF
+        and over_cutoff(reader.term_dfs(list(dict.fromkeys(seq))).values())
     ):
         LAST_PHRASE_ROUTE = "distributed"
         rows = search_phrase_distributed(
@@ -3845,7 +3547,7 @@ def search_lm(
     collection frequency = the term's decoded tf sum, total token count
     from corpus stats — no second corpus pass, no index change. Exhaustive
     evaluation only: arbitrary similarities break BM25's monotone
-    block-max bounds, so WAND is intentionally not offered here (same
+    block-max bounds, so the distributed chunk prune does not apply (same
     reasoning as function_score)."""
     terms = list(dict.fromkeys(terms))
     if not terms:
@@ -3920,7 +3622,7 @@ def search_classic(
     swapping similarities costs nothing at build time (the same contract as
     :func:`search_lm`). Exhaustive evaluation only: the block-max metadata
     is BM25's, and ClassicSimilarity's unbounded idf^2 growth makes reusing
-    those bounds unsafe, so WAND is intentionally not offered here."""
+    those bounds unsafe, so no block-max skipping is offered here."""
     terms = list(dict.fromkeys(terms))
     if not terms:
         raise ValueError("empty term list")
@@ -4233,13 +3935,13 @@ def _ids_term_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
 # ----------------------------------------------------- chunk skipping (A19
 # on the cluster path) — block-max pruning BEFORE the mapInArrow decode.
 #
-# The driver fast path already skips blocks via WAND; the distributed
-# scatter-gather path used to decode EVERY chunk of every query term. The
-# chunk rows carry the block-max metadata (per-block and per-chunk (tf, dl)
-# impact frontiers, format.py), so a theta lower bound on the k-th best
-# final score can be established from metadata alone and whole chunk rows
-# filtered out of the scan before a single blob byte is decoded — the
-# Ding & Suel BMW idea recast as a declarative pre-filter.
+# Without it the distributed scatter-gather path decodes EVERY chunk of
+# every query term. The chunk rows carry the block-max metadata (per-block
+# and per-chunk (tf, dl) impact frontiers, format.py), so a theta lower
+# bound on the k-th best final score can be established from metadata
+# alone and whole chunk rows filtered out of the scan before a single blob
+# byte is decoded — the Ding & Suel BMW idea recast as a declarative
+# pre-filter.
 #
 # Soundness (disjunctive, non-negative idf — Lucene BM25+ form):
 # * UB(chunk) = idf*boost * max over the CHUNK-level frontier pairs. The
@@ -4699,8 +4401,19 @@ def search_distributed(
         if dfs[rare] <= 5_000_000:
             cand = F.broadcast(cand)
         scored = scored.join(cand, "doc_id", "left_semi")
+    total = F.sum("contrib")
+    if k is not None and round_digits is None:
+        # unrounded top-k (search_topk past EXHAUSTIVE_CUTOFF): a double sum
+        # depends on the order the shuffled partials merge in, so tied docs
+        # could differ by an ulp within one page and a doc's score could
+        # move between pages. Summing each doc's contributions in sorted
+        # order makes its score a function of the doc alone.
+        total = F.aggregate(
+            F.array_sort(F.collect_list("contrib")), F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
     agg = scored.groupBy("doc_id").agg(
-        F.sum("contrib").alias("score"), F.count("*").alias("nmatch")
+        total.alias("score"), F.count("*").alias("nmatch")
     )
     if mode == "conjunctive":
         agg = agg.filter(F.col("nmatch") == len(terms))
@@ -4737,13 +4450,16 @@ def search_distributed(
         # A38 keyset pagination on the cluster path: strictly-after the
         # (score, doc_id) cursor in rank order, compared on the SAME
         # rounded value the ordering uses — a codegen filter ahead of the
-        # TakeOrderedAndProject, so page depth never changes the plan cost
+        # TakeOrderedAndProject, so page depth never changes the plan cost.
+        # Unrounded scores compare within the driver kernel's _EPS band: a
+        # cursor from a driver page was summed in another order.
         if k is None:
             raise ValueError("after needs a top-k query (k is None)")
         s_a, d_a = float(after[0]), int(after[1])
+        eps = _EPS if round_digits is None else 0.0
         out = out.filter(
-            (F.col("score") < s_a)
-            | ((F.col("score") == s_a) & (F.col("doc_id") > d_a))
+            (F.col("score") < s_a - eps)
+            | ((F.col("score") <= s_a + eps) & (F.col("doc_id") > d_a))
         )
     if k is None:  # unsorted candidate set (internal callers rank later)
         return out

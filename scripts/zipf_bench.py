@@ -27,6 +27,43 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+def synth_corpus(
+    spark, dist: str, out: str, n_docs: int, doc_tokens: int, vocab: int
+) -> None:
+    """Write a seeded ``documents``-shaped corpus of ``n_docs`` docs with
+    ``doc_tokens`` tokens each over ``vocab`` terms ``w1..wV`` to ``out``:
+    ``dist="zipf"`` draws term ranks Zipf-1.0 (rank = floor(V^u)),
+    anything else uniformly."""
+    from pyspark.sql import functions as F
+
+    u = (
+        F.pmod(F.xxhash64(F.col("doc_id"), F.col("pos"), F.lit(dist)), F.lit(1_000_003))
+        / F.lit(1_000_003.0)
+    )
+    if dist == "zipf":  # log-uniform inverse transform: p(r) ~ 1/r
+        rank = F.floor(F.pow(F.lit(float(vocab)), u)).cast("long")
+    else:  # uniform over the same vocabulary
+        rank = (F.floor(u * vocab) + 1).cast("long")
+    docs = (
+        spark.range(0, n_docs, 1, numPartitions=64)
+        .select(F.col("id").alias("doc_id"))
+        .select(
+            "doc_id",
+            F.explode(F.sequence(F.lit(1), F.lit(doc_tokens))).alias("pos"),
+        )
+        .select("doc_id", F.concat(F.lit("w"), rank).alias("tok"))
+        .groupBy("doc_id")
+        .agg(F.concat_ws(" ", F.collect_list("tok")).alias("text"))
+        .select(
+            "doc_id", "text",
+            F.lit("en").alias("lang"),
+            F.lit(dist).alias("source"),
+            F.length("text").alias("n_chars"),
+        )
+    )
+    docs.write.mode("overwrite").parquet(out)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=2_000_000)
@@ -52,34 +89,6 @@ def main() -> None:
     )
     warm_python_workers(spark)
 
-    def synth(dist: str, out: str) -> None:
-        u = (
-            F.pmod(F.xxhash64(F.col("doc_id"), F.col("pos"), F.lit(dist)), F.lit(1_000_003))
-            / F.lit(1_000_003.0)
-        )
-        if dist == "zipf":  # log-uniform inverse transform: p(r) ~ 1/r
-            rank = F.floor(F.pow(F.lit(float(args.vocab)), u)).cast("long")
-        else:  # uniform over the same vocabulary
-            rank = (F.floor(u * args.vocab) + 1).cast("long")
-        docs = (
-            spark.range(0, args.docs, 1, numPartitions=64)
-            .select(F.col("id").alias("doc_id"))
-            .select(
-                "doc_id",
-                F.explode(F.sequence(F.lit(1), F.lit(args.doc_tokens))).alias("pos"),
-            )
-            .select("doc_id", F.concat(F.lit("w"), rank).alias("tok"))
-            .groupBy("doc_id")
-            .agg(F.concat_ws(" ", F.collect_list("tok")).alias("text"))
-            .select(
-                "doc_id", "text",
-                F.lit("en").alias("lang"),
-                F.lit(dist).alias("source"),
-                F.length("text").alias("n_chars"),
-            )
-        )
-        docs.write.mode("overwrite").parquet(out)
-
     out: dict = {
         "n_docs": args.docs,
         "doc_tokens": args.doc_tokens,
@@ -90,7 +99,7 @@ def main() -> None:
     for dist in ("uniform", "zipf"):
         src = f"{shm}/{dist}"
         t0 = time.time()
-        synth(dist, src)
+        synth_corpus(spark, dist, src, args.docs, args.doc_tokens, args.vocab)
         synth_s = round(time.time() - t0, 1)
         corpus = corpus_from_documents(spark.read.parquet(src))
         walls = []

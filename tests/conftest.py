@@ -53,3 +53,18 @@ def duck():
         )
     yield con
     con.close()
+
+
+def assert_same_topk(got, want, digits: int = 6) -> None:
+    """``got`` ranks like ``want`` at ``digits``-rounded scores: non-increasing
+    scores, the same score sequence, and the same (doc, score) rows above
+    the last place. Docs tied at the last place are interchangeable — which
+    of them a top-k keeps depends on float summation order."""
+    g = [(-round(s, digits), int(d)) for d, s in got]
+    w = [(-round(s, digits), int(d)) for d, s in want]
+    assert [s for s, _ in g] == sorted(s for s, _ in g), got
+    g, w = sorted(g), sorted(w)
+    assert [s for s, _ in g] == [s for s, _ in w], (got, want)
+    if w:
+        last = w[-1][0]
+        assert [x for x in g if x[0] != last] == [x for x in w if x[0] != last]

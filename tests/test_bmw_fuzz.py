@@ -1,17 +1,19 @@
-"""Fuzz the block-max WAND safety property: for many seeded random queries,
-WAND top-k must equal exhaustive top-k exactly (Ding & Suel's safety
-guarantee). This is the test family that caught the tied-pivot upper-bound
-bug (an iterator after the pivot positioned at the same docid must be
-included in the skip bound)."""
+"""Seeded random queries against the DuckDB twin: for 60 cases (1-6
+terms, deliberate duplicates, both modes, k in {1, 3, 10, 25}) the driver
+top-k equals ``bm25_oracle_sql`` at the golden 6-digit rounding, docs tied
+at the k-th place being interchangeable.
+
+The test keeps its historical name from the block-max WAND safety fuzz."""
 
 from __future__ import annotations
 
 import random
 
-import numpy as np
 import pytest
 
-from miru_spark.plans.search import search_exhaustive, search_topk
+from miru_spark.plans.relational import bm25_oracle_sql
+from miru_spark.plans.search import search_topk
+from tests.conftest import assert_same_topk
 
 VOCAB = [
     "a", "agg", "batch", "big", "column", "customer", "data", "dup", "fast",
@@ -38,10 +40,9 @@ def _cases():
 @pytest.mark.parametrize(
     "terms,mode,k", _cases(), ids=[f"{i}" for i in range(len(_cases()))]
 )
-def test_wand_equals_exhaustive_fuzz(reader, terms, mode, k):
-    fast = search_topk(reader, terms, mode=mode, k=k, strategy="wand")
-    ex = search_exhaustive(reader, terms, mode=mode, k=k)
-    assert [d for d, _ in fast] == [d for d, _ in ex]
-    np.testing.assert_allclose(
-        [s for _, s in fast], [s for _, s in ex], rtol=0, atol=1e-9
-    )
+def test_wand_equals_exhaustive_fuzz(reader, duck, terms, mode, k):
+    got = search_topk(reader, terms, mode=mode, k=k)
+    want = duck.execute(bm25_oracle_sql(terms, mode, k=k)).fetchall()
+    assert_same_topk(got, want)
+    # ties broken by doc_id, as in the twin's ORDER BY
+    assert got == sorted(got, key=lambda h: (-round(h[1], 6), h[0]))

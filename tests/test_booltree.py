@@ -435,11 +435,12 @@ def test_auto_routes_to_distributed_past_cutoff(reader, monkeypatch):
     """Hot-leaf trees fall through to search_bool_distributed without the
     caller asking (VERDICT r4 #4), identical results, where= included."""
     from miru_spark.plans import booltree as B
+    from miru_spark.plans import search as S
 
     q = "(the AND data) OR dup"
     drv = search_bool(reader, q, k=10, strategy="driver")
     assert B.LAST_ROUTE == "driver"
-    monkeypatch.setattr(B, "DISTRIBUTED_CUTOFF", 0)
+    monkeypatch.setattr(S, "EXHAUSTIVE_CUTOFF", 0)
     assert search_bool(reader, q, k=10) == drv
     assert B.LAST_ROUTE == "distributed"
     w = {"lang": ["en"]}

@@ -1,9 +1,8 @@
-"""Per-term boosts (Lucene 'term^w'): boost scales the term's idf, keeping
-WAND's upper bounds exact — all paths rank-identical and oracle-checked."""
+"""Per-term boosts (Lucene 'term^w'): boost scales the term's idf — all
+paths rank-identical and oracle-checked."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
 from miru_spark.plans.relational import bm25_oracle_sql
@@ -13,6 +12,7 @@ from miru_spark.plans.search import (
     search_exhaustive,
     search_topk,
 )
+from tests.conftest import assert_same_topk
 
 CASES = [
     (["the", "dup"], "disjunctive", {"dup": 0.25}),
@@ -29,11 +29,15 @@ def test_boost_matches_oracle(reader, duck, terms, mode, boosts):
 
 
 @pytest.mark.parametrize("terms,mode,boosts", CASES, ids=lambda x: str(x))
-def test_boost_wand_equals_exhaustive(reader, terms, mode, boosts):
-    a = search_topk(reader, terms, mode=mode, k=10, strategy="wand", boosts=boosts)
+def test_boost_wand_equals_exhaustive(reader, terms, mode, boosts, monkeypatch):
+    """Boosts past the cutoff (search_distributed) rank like the driver
+    kernel. (Historical name: the path past the cutoff was WAND.)"""
+    from miru_spark.plans import search as S
+
     b = search_exhaustive(reader, terms, mode=mode, k=10, boosts=boosts)
-    assert [d for d, _ in a] == [d for d, _ in b]
-    np.testing.assert_allclose([s for _, s in a], [s for _, s in b], atol=1e-9)
+    monkeypatch.setattr(S, "EXHAUSTIVE_CUTOFF", 0)
+    a = search_topk(reader, terms, mode=mode, k=10, boosts=boosts)
+    assert_same_topk(a, b)
 
 
 def test_boost_distributed_matches_oracle(reader, duck):

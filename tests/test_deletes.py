@@ -33,19 +33,25 @@ def del_index(spark, tmp_path_factory):
     return p
 
 
-def test_tombstones_filter_every_path(spark, del_index, reader):
+def test_tombstones_filter_every_path(spark, del_index, reader, monkeypatch):
     r = IndexReader(spark, del_index)
     assert sorted(r.tombstones.tolist()) == sorted(DELETED)
     base = search_topk(reader, ["join", "hash"], k=10)
     assert any(d in DELETED for d, _ in base)  # deletions actually bite
     for got in [
         search_topk(r, ["join", "hash"], k=10),
-        search_topk(r, ["join", "hash"], k=10, strategy="wand"),
         search_exhaustive(r, ["join", "hash"], k=10),
         [(x.doc_id, x.score) for x in search_distributed(r, ["join", "hash"]).collect()],
         search_phrase(r, "the a", k=100),
     ]:
         assert not ({d for d, _ in got} & set(DELETED))
+    # and past the routing cutoff, where search_topk hands off
+    from miru_spark.plans import search as S
+
+    monkeypatch.setattr(S, "EXHAUSTIVE_CUTOFF", 0)
+    got = search_topk(r, ["join", "hash"], k=10)
+    assert got and not ({d for d, _ in got} & set(DELETED))
+    monkeypatch.undo()
     # survivors keep their exact scores (tombstones only REMOVE docs)
     base_scores = dict(base)
     for d, s in search_topk(r, ["join", "hash"], k=10):

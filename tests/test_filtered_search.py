@@ -20,6 +20,7 @@ from miru_spark.plans.search import (
     search_phrase,
     search_topk,
 )
+from tests.conftest import assert_same_topk
 
 @pytest.fixture(scope="module")
 def reader_pos(spark, tmp_path_factory):
@@ -83,21 +84,21 @@ def test_filtered_topk_is_postfiltered_ranking(reader, mode, where):
 
 
 @pytest.mark.parametrize("mode", ["conjunctive", "disjunctive"])
-def test_filtered_strategies_agree(reader, mode):
-    """WAND heap-insert filtering == exhaustive allowlist mask — the two
-    serving strategies must rank identically under a filter."""
+def test_filtered_strategies_agree(reader, mode, monkeypatch):
+    """The driver allowlist mask == the distributed semi-join search_topk
+    routes to past the cutoff — both routes rank identically under a
+    filter."""
+    from miru_spark.plans import search as S
+
     terms = ["the", "dup", "a"]
-    r6 = lambda res: [(d, round(s, 6)) for d, s in res]
-    wand = r6(search_topk(
-        reader, terms, mode=mode, k=10, strategy="wand", where=WHERE_LANG
-    ))
-    exh = r6(search_topk(
-        reader, terms, mode=mode, k=10, strategy="exhaustive", where=WHERE_LANG
-    ))
-    assert wand == exh
-    assert exh == r6(search_exhaustive(
+    exh = search_topk(reader, terms, mode=mode, k=10, where=WHERE_LANG)
+    assert exh == search_exhaustive(
         reader, terms, mode=mode, k=10, where=WHERE_LANG
-    ))
+    )
+    monkeypatch.setattr(S, "EXHAUSTIVE_CUTOFF", 0)
+    assert_same_topk(
+        search_topk(reader, terms, mode=mode, k=10, where=WHERE_LANG), exh
+    )
 
 
 def test_filter_composes_with_not_and_boosts(reader):
@@ -296,11 +297,12 @@ def test_field_value_grammar(reader):
 # ---- A34b Prefix metadata filter ---------------------------------------------
 
 
-def test_prefix_filter_matches_postfilter(reader):
+def test_prefix_filter_matches_postfilter(reader, monkeypatch):
     """where={col: Prefix(p)} == filtering the unfiltered ranking's docs by
-    startswith on the docmap, on BOTH strategies and the distributed path;
-    the pyarrow and Spark predicates agree doc-for-doc."""
+    startswith on the docmap, on both sides of the routing cutoff and the
+    distributed path; the pyarrow and Spark predicates agree doc-for-doc."""
     from miru_spark.filters import Prefix
+    from miru_spark.plans import search as S
     from miru_spark.plans.search import search_distributed, search_topk
 
     spec = {"path": Prefix("doc_0001")}
@@ -311,13 +313,14 @@ def test_prefix_filter_matches_postfilter(reader):
     }
     want = [(d, round(s, 6)) for d, s in full
             if paths[d].startswith("doc_0001")][:10]
-    for strategy in ("wand", "exhaustive"):
+    for cutoff in (S.EXHAUSTIVE_CUTOFF, 0):
+        monkeypatch.setattr(S, "EXHAUSTIVE_CUTOFF", cutoff)
         got = [
             (d, round(s, 6))
             for d, s in search_topk(reader, ["the"], mode="disjunctive",
-                                    k=10, where=spec, strategy=strategy)
+                                    k=10, where=spec)
         ]
-        assert got == want and got, strategy
+        assert got == want and got, cutoff
     dist = [
         (int(r.doc_id), float(r.score))
         for r in search_distributed(reader, ["the"], mode="disjunctive",
@@ -339,6 +342,24 @@ def test_prefix_upper_bound_and_validation():
     assert Prefix("a") == Prefix("a") and Prefix("a") != Prefix("b")
     with pytest.raises(ValueError):
         Prefix("")
+
+
+def test_prefix_ending_before_surrogates_serves(reader):
+    """A prefix ending in U+D7FF bounds at U+E000, past the surrogate
+    block: a lone surrogate cannot be UTF-8-encoded into the pyarrow scan
+    bound, so the driver filter used to raise instead of answering."""
+    from miru_spark.filters import Not, Prefix
+
+    assert Prefix("doc_0001\ud7ff").upper_bound() == "doc_0001\ue000"
+    assert Prefix("a\ud800").upper_bound() == "a\ue000"
+    assert search_topk(
+        reader, ["the"], mode="disjunctive", k=10,
+        where={"path": Prefix("doc_0001\ud7ff")},
+    ) == []
+    # negated, the same bound keeps every doc
+    spec = {"path": Not(Prefix("doc_0001\ud7ff"))}
+    assert search_topk(reader, ["the"], mode="disjunctive", k=10, where=spec) \
+        == search_topk(reader, ["the"], mode="disjunctive", k=10)
 
 
 def test_not_filter_matches_postfilter(reader):

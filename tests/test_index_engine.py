@@ -10,7 +10,7 @@ from miru_spark.index.writer import build_index, read_manifest
 from miru_spark.plans.relational import bm25_oracle_sql
 from miru_spark.plans.search import search_distributed, search_exhaustive, search_topk
 from miru_spark.schema import read_corpus
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, assert_same_topk
 
 QUERIES = [
     (["join", "hash"], "conjunctive"),
@@ -32,19 +32,20 @@ def _oracle(duck, terms, mode, k=10):
 
 @pytest.mark.parametrize("terms,mode", QUERIES, ids=lambda x: str(x))
 def test_fast_path_matches_oracle(reader, duck, terms, mode):
-    got = search_topk(reader, terms, mode=mode, k=10, strategy="wand")
+    got = search_topk(reader, terms, mode=mode, k=10)
     got_rounded = [(d, round(s, 6)) for d, s in got]
     assert got_rounded == _oracle(duck, terms, mode)
 
 
 @pytest.mark.parametrize("terms,mode", QUERIES, ids=lambda x: str(x))
-def test_bmw_equals_exhaustive(reader, terms, mode):
-    fast = search_topk(reader, terms, mode=mode, k=10, strategy="wand")
+def test_bmw_equals_exhaustive(reader, terms, mode, monkeypatch):
+    """The route past the cutoff (search_distributed) ranks like the driver
+    kernel. (Historical name: the path past the cutoff was WAND.)"""
+    from miru_spark.plans import search as S
+
     ex = search_exhaustive(reader, terms, mode=mode, k=10)
-    assert [d for d, _ in fast] == [d for d, _ in ex]
-    np.testing.assert_allclose(
-        [s for _, s in fast], [s for _, s in ex], rtol=0, atol=1e-9
-    )
+    monkeypatch.setattr(S, "EXHAUSTIVE_CUTOFF", 0)
+    assert_same_topk(search_topk(reader, terms, mode=mode, k=10), ex)
 
 
 @pytest.mark.parametrize(

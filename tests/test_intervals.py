@@ -269,11 +269,12 @@ def test_auto_routes_to_distributed_past_cutoff(pos_reader, monkeypatch):
     """Hot-leaf trees must fall through to the distributed plan without
     the caller asking (VERDICT r4 #4), with identical results."""
     from miru_spark.plans import intervals as iv
+    from miru_spark.plans import search as S
 
     spec = SPECS[3]
     drv = search_intervals(pos_reader, spec, k=10, strategy="driver")
     assert iv.LAST_ROUTE == "driver"
-    monkeypatch.setattr(iv, "DISTRIBUTED_CUTOFF", 0)
+    monkeypatch.setattr(S, "EXHAUSTIVE_CUTOFF", 0)
     routed = search_intervals(pos_reader, spec, k=10)
     assert iv.LAST_ROUTE == "distributed"
     assert routed == drv

@@ -40,12 +40,17 @@ def test_mm_monotone_and_match_floor(reader):
 
 
 @pytest.mark.parametrize("m", [2, 3, 4])
-def test_mm_wand_equals_exhaustive(reader, m):
-    wand = search_topk(
-        reader, TERMS5, "disjunctive", k=10, strategy="wand", min_match=m
-    )
+def test_mm_wand_equals_exhaustive(reader, m, monkeypatch):
+    """min_match > 1 stays on the driver kernel past the cutoff (the
+    distributed plan has no match floor). (Historical name: the path past
+    the cutoff was WAND.)"""
+    from miru_spark.plans import search as S
+
     exh = search_exhaustive(reader, TERMS5, "disjunctive", k=10, min_match=m)
-    assert wand == exh
+    monkeypatch.setattr(S, "EXHAUSTIVE_CUTOFF", 0)
+    assert search_topk(
+        reader, TERMS5, "disjunctive", k=10, min_match=m
+    ) == exh
 
 
 def test_mm_matches_duckdb_oracle(reader, duck):

@@ -1,14 +1,13 @@
 """Boolean NOT (posting-list difference) across all serving paths.
 
 Contract: ``exclude`` drops every doc containing ANY excluded term; excluded
-terms never contribute to scores. All four paths — WAND/galloping iterators,
-vectorized exhaustive, distributed DataFrame plan, relational twin — must be
+terms never contribute to scores. All three paths — the driver's vectorized
+kernel, the distributed DataFrame plan, the relational twin — must be
 rank-identical to each other and to the DuckDB oracle.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
 from miru_spark.plans.relational import bm25_oracle_sql, bm25_search_relational
@@ -19,7 +18,7 @@ from miru_spark.plans.search import (
     search_topk,
 )
 from miru_spark.schema import read_corpus
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, assert_same_topk
 
 NOT_QUERIES = [
     (["join", "hash"], "conjunctive", ["tree"]),
@@ -37,18 +36,20 @@ def _oracle(duck, terms, mode, exclude, k=10):
 
 @pytest.mark.parametrize("terms,mode,excl", NOT_QUERIES, ids=lambda x: str(x))
 def test_not_fast_path_matches_oracle(reader, duck, terms, mode, excl):
-    got = search_topk(reader, terms, mode=mode, k=10, strategy="wand", exclude=excl)
+    got = search_topk(reader, terms, mode=mode, k=10, exclude=excl)
     assert [(d, round(s, 6)) for d, s in got] == _oracle(duck, terms, mode, excl)
 
 
 @pytest.mark.parametrize("terms,mode,excl", NOT_QUERIES, ids=lambda x: str(x))
-def test_not_wand_equals_exhaustive(reader, terms, mode, excl):
-    fast = search_topk(reader, terms, mode=mode, k=10, strategy="wand", exclude=excl)
+def test_not_wand_equals_exhaustive(reader, terms, mode, excl, monkeypatch):
+    """NOT past the cutoff (search_distributed's anti-join) ranks like the
+    driver kernel. (Historical name: the path past the cutoff was WAND.)"""
+    from miru_spark.plans import search as S
+
     ex = search_exhaustive(reader, terms, mode=mode, k=10, exclude=excl)
-    assert [d for d, _ in fast] == [d for d, _ in ex]
-    np.testing.assert_allclose(
-        [s for _, s in fast], [s for _, s in ex], rtol=0, atol=1e-9
-    )
+    monkeypatch.setattr(S, "EXHAUSTIVE_CUTOFF", 0)
+    fast = search_topk(reader, terms, mode=mode, k=10, exclude=excl)
+    assert_same_topk(fast, ex)
 
 
 @pytest.mark.parametrize(

@@ -21,16 +21,22 @@ from miru_spark.plans.search import (
 # ------------------------------------------------------------- search_after
 
 
-@pytest.mark.parametrize("strategy", ["exhaustive", "wand"])
+@pytest.mark.parametrize("strategy", ["exhaustive", "distributed"])
 @pytest.mark.parametrize("mode", ["conjunctive", "disjunctive"])
-def test_search_after_pages_tile_the_full_ranking(reader, mode, strategy):
+def test_search_after_pages_tile_the_full_ranking(
+    reader, mode, strategy, monkeypatch
+):
+    """Pages on the driver kernel, and on the route past the cutoff
+    (``distributed``), tile that route's full ranking."""
+    from miru_spark.plans import search as S
+
+    if strategy == "distributed":
+        monkeypatch.setattr(S, "EXHAUSTIVE_CUTOFF", 0)
     terms = ["the", "a"]
-    full = search_topk(reader, terms, mode=mode, k=30, strategy=strategy)
+    full = search_topk(reader, terms, mode=mode, k=30)
     pages, cursor = [], None
     for _ in range(3):
-        page = search_topk(
-            reader, terms, mode=mode, k=10, strategy=strategy, after=cursor
-        )
+        page = search_topk(reader, terms, mode=mode, k=10, after=cursor)
         if not page:
             break
         pages.extend(page)
@@ -38,20 +44,18 @@ def test_search_after_pages_tile_the_full_ranking(reader, mode, strategy):
     assert pages == full
 
 
-def test_search_after_cross_strategy_page2(reader):
-    """Cursor from the WAND page drives the exhaustive page to the same
-    result (and vice versa) — the epsilon tie band makes the boundary
-    path-independent."""
+def test_search_after_cross_strategy_page2(reader, monkeypatch):
+    """A cursor from a driver-kernel page drives the page past the routing
+    cutoff to the same result: page 2 does not depend on the route."""
+    from miru_spark.plans import search as S
+
     terms = ["the", "dup"]
-    p1 = search_topk(reader, terms, mode="disjunctive", k=7, strategy="wand")
+    p1 = search_topk(reader, terms, mode="disjunctive", k=7)
     cur = (p1[-1][1], p1[-1][0])
-    a = search_topk(
-        reader, terms, mode="disjunctive", k=7, strategy="wand", after=cur
-    )
-    b = search_topk(
-        reader, terms, mode="disjunctive", k=7, strategy="exhaustive", after=cur
-    )
-    assert a == b
+    a = search_topk(reader, terms, mode="disjunctive", k=7, after=cur)
+    monkeypatch.setattr(S, "EXHAUSTIVE_CUTOFF", 0)
+    b = search_topk(reader, terms, mode="disjunctive", k=7, after=cur)
+    assert [(d, round(s, 6)) for d, s in a] == [(d, round(s, 6)) for d, s in b]
     assert not (set(d for d, _ in p1) & set(d for d, _ in a))
 
 
@@ -75,6 +79,66 @@ def test_search_after_distributed_pages_tile(reader):
         pages.extend((int(r["doc_id"]), float(r["score"])) for r in rows)
         cursor = (float(rows[-1]["score"]), int(rows[-1]["doc_id"]))
     assert pages == full
+
+
+@pytest.fixture(scope="module")
+def tied_reader(spark, tmp_path_factory):
+    """Six groups of eight identical docs over three query terms (exact
+    BM25 ties), in chunks of 16 postings. A ``kilo`` filler doc after
+    every third group member shifts kilo's chunk boundaries off the other
+    terms', so members of one group sit in different chunk-row pairs."""
+    from miru_spark.index.reader import IndexReader
+    from miru_spark.index.writer import build_index
+    from miru_spark.schema import DOCUMENTS_SCHEMA, corpus_from_documents
+
+    texts = []
+    for g in range(6):
+        doc = " ".join(["kilo"] * (1 + g % 3) + ["lima"] * (1 + g // 3)
+                       + ["tango"] + ["zulu"] * g)
+        for j in range(8):
+            texts += [doc] + (["kilo yankee zulu"] if j % 3 == 2 else [])
+    texts += ["zulu yankee"] * 30
+    rows = [(i, t, "en", "r", len(t)) for i, t in enumerate(texts)]
+    p = str(tmp_path_factory.mktemp("tied") / "idx")
+    build_index(spark, corpus_from_documents(
+        spark.createDataFrame(rows, DOCUMENTS_SCHEMA)), p,
+        num_partitions=4, target_chunk=16)
+    return IndexReader(spark, p)
+
+
+def test_search_after_tiles_tied_ranking_past_cutoff(tied_reader, monkeypatch):
+    """Past the routing cutoff, pages of a 3-term disjunction with page
+    boundaries inside groups of tied docs tile the driver kernel's ranking,
+    when every page reads the chunk rows in another order. A sum of three
+    doubles depends on its order: summed as they arrive, tied docs can
+    differ by an ulp within a page and a doc's score can move between
+    pages, so the cursor drops or repeats tied docs."""
+    from miru_spark.plans import search as S
+
+    r, terms = tied_reader, ["kilo", "lima", "tango"]
+    full = S.search_exhaustive(r, terms, mode="disjunctive", k=100)
+    assert len(full) == 60 and len({s for _, s in full}) == 7
+    real = r.postings_df
+
+    def postings_df(terms=None):
+        # one partition, chunk rows in a seeded shuffle: each doc's sum
+        # runs in the order its chunk rows arrive
+        df = real(terms)
+        rows = df.collect()
+        np.random.default_rng(len(pages)).shuffle(rows)
+        return r.spark.createDataFrame(rows, df.schema).coalesce(1)
+
+    monkeypatch.setattr(r, "postings_df", postings_df)
+    monkeypatch.setattr(S, "EXHAUSTIVE_CUTOFF", 0)
+    pages, cursor = [], None
+    while True:
+        page = S.search_topk(r, terms, mode="disjunctive", k=5, after=cursor)
+        if not page:
+            break
+        pages.extend(page)
+        cursor = (page[-1][1], page[-1][0])
+    assert [d for d, _ in pages] == [d for d, _ in full]
+    assert [round(s, 9) for _, s in pages] == [round(s, 9) for _, s in full]
 
 
 def test_search_after_distributed_rejects_unranked(reader):

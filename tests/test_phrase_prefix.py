@@ -159,7 +159,7 @@ def test_phrase_auto_routes_to_distributed_past_cutoff(pos_reader, monkeypatch):
 
     drv = search_phrase(pos_reader, "the a", k=10, strategy="driver")
     assert S.LAST_PHRASE_ROUTE == "driver"
-    monkeypatch.setattr(S, "PHRASE_DISTRIBUTED_CUTOFF", 0)
+    monkeypatch.setattr(S, "EXHAUSTIVE_CUTOFF", 0)
     assert search_phrase(pos_reader, "the a", k=10) == drv
     assert S.LAST_PHRASE_ROUTE == "distributed"
     # where= pins the driver path

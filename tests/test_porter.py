@@ -89,12 +89,14 @@ def test_stem_dictionary(spark):
 def test_dict_path_token_identical_to_udf_path(spark):
     """The 100-TB shape (distinct vocab -> stem O(|vocab|) in Python ->
     broadcast join back) produces token-for-token the same corpus as the
-    per-row porter UDF."""
+    per-row porter UDF — zero-token docs (empty, all-stopword) included."""
     rows = [
         (0, "Running relations and troubled TROUBLES"),
         (1, "generalization generalizations controlling"),
         (2, "the hopefulness of adjustable adjustment is"),
         (3, "oscillators oscillating controlled hopeful"),
+        (4, ""),
+        (5, "the of and is"),
     ]
     corpus = spark.createDataFrame(rows, "doc_id long, content string")
     udf_toks = {
@@ -112,6 +114,7 @@ def test_dict_path_token_identical_to_udf_path(spark):
         ).collect()
     }
     assert dict_toks == udf_toks
+    assert udf_toks[4] == udf_toks[5] == []
     # and the stemming genuinely changed something
     assert udf_toks[0] == ["run", "relat", "troubl", "troubl"]
 

@@ -77,6 +77,5 @@ def test_distributed_conjunctive_all_terms_missing(spark, reader):
 
 def test_k_zero_and_bad_mode(reader):
     assert search_topk(reader, ["the"], mode="disjunctive", k=0) == []
-    assert search_topk(reader, ["the"], mode="disjunctive", k=0, strategy="wand") == []
     with pytest.raises(ValueError):
         search_topk(reader, ["the"], mode="conjuctive")  # typo'd mode
